@@ -164,7 +164,7 @@ object Compaction {
       val sideRows = TargetedDelete.loadStats(liveDir)
       def rcOf(name: String): Long = sideRows.collectFirst {
         case ((f, _), r) if f == name => r.rowCount }.getOrElse(-1L)
-      spark.read.parquet(small.map(_.toString): _*)
+      VersionScan.files(spark, small)
         .repartition(n)
         .write.options(KeyBloom.nativeWriteOptionsCols(
           blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
@@ -323,7 +323,7 @@ object Compaction {
         val bytes = comp.map(JFiles.size(_)).sum
         val n = math.max(1L, math.min(comp.size.toLong,
           (bytes + targetBytes - 1) / targetBytes)).toInt
-        spark.read.parquet(comp.map(_.toString): _*)
+        VersionScan.files(spark, comp)
           .repartitionByRange(n, col(keyCol))
           .sortWithinPartitions(col(keyCol))
       }

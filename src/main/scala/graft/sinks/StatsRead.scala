@@ -9,20 +9,25 @@ import graft.Tables
 /** S16b — STATS-PRUNED READS on the atomic table: the read-path half of the
   * Delta/Iceberg data-skipping move (r16 verdict item 1, its top-next). The
   * `_KEYSTATS` sidecar ([[KeyStats]]) and the footer fallback already let
-  * DELETES skip non-intersecting files; until now [[AtomicTable.read]]
-  * handed the whole version directory to `spark.read.parquet`, so a
-  * point/range query on an id-clustered corpus scanned every file. This
-  * object prunes the FILE LIST against the per-file min/max BEFORE the scan
-  * is constructed — at 100 TB the difference between "open 10⁶ files, let
-  * row-group stats discard most rows" and "open the 1–2 files that can
-  * contain the key at all": Spark's own parquet filter pushdown only prunes
-  * row groups INSIDE files it has already planned, listed, and opened.
+  * DELETES skip non-intersecting files; a plain [[AtomicTable.read]] scans
+  * the whole version directory, so a point/range query through it on an
+  * id-clustered corpus scans every file. This object prunes the FILE LIST
+  * against the per-file min/max BEFORE the scan is constructed — at 100 TB
+  * the difference between "open 10⁶ files, let row-group stats discard most
+  * rows" and "open the 1–2 files that can contain the key at all": Spark's
+  * own parquet filter pushdown only prunes row groups INSIDE files it has
+  * already planned, listed, and opened.
   *
   * Decision cost mirrors the delete path exactly (shared [[TargetedDelete
   * .pruneFiles]]): one small sequential sidecar read when the column is
   * indexed (zero footer reads at any file count), per-file footer metadata
   * reads as the hybrid fallback, executor-parallel past
-  * [[KeyStats.ParallelFooterThreshold]]. The row-level tail re-applies the
+  * [[KeyStats.ParallelFooterThreshold]]. Building the frame runs NO Spark
+  * job on the sidecar/TSV-bloom path: the surviving files open under one
+  * footer's schema, read on the driver ([[VersionScan]] — not a stats
+  * footer read, so `footerReads` is unaffected); the jobs a read pays are
+  * its scan, plus the parallel footer sweep or the distributed manifest
+  * probe when those rungs are taken. The row-level tail re-applies the
   * predicate INSIDE the surviving files — stats are file-granular, so the
   * scan still needs the filter (which Spark pushes into the parquet reader's
   * row-group stats; the two prunings compose). NULL keys never match,
@@ -132,7 +137,7 @@ object StatsRead {
     * the producers, which always leave a schema-bearing part file). */
   private def emptyLike(spark: SparkSession, files: Seq[java.nio.file.Path],
       liveDir: java.nio.file.Path): DataFrame =
-    if (files.nonEmpty) spark.read.parquet(files.head.toString).where(lit(false))
+    if (files.nonEmpty) VersionScan.files(spark, files.take(1)).where(lit(false))
     else spark.read.parquet(liveDir.toString).where(lit(false))
 
   /** DYNAMIC FILE PRUNING, join-shaped (Delta's DFP, decided from the
@@ -171,7 +176,7 @@ object StatsRead {
     val touchedFiles = files.filter(f => touched(f.getFileName.toString))
     val base =
       if (touchedFiles.isEmpty) emptyLike(spark, files, dir)
-      else spark.read.parquet(touchedFiles.map(_.toString): _*)
+      else VersionScan.files(spark, touchedFiles)
     (base.join(stableProbe, Seq(keyCol), "inner"),
       ReadStats(v, files.size, touchedFiles.size, unknown.size))
   }
@@ -200,7 +205,7 @@ object StatsRead {
     }
     val df =
       if (touched.isEmpty) emptyLike(spark, files, Paths.get(root, v))
-      else preds.foldLeft(spark.read.parquet(touched.map(_.toString): _*)) {
+      else preds.foldLeft(VersionScan.files(spark, touched)) {
         case (d, (c, ks)) => TargetedDelete.matched(d, c, ks)
       }
     (df, ReadStats(v, files.size, touched.size, opened))
@@ -295,7 +300,7 @@ object StatsRead {
     val df =
       if (touched.isEmpty) emptyLike(spark, files, dir)
       else TargetedDelete.matched(
-        spark.read.parquet(touched.map(_.toString): _*), keyCol, ks)
+        VersionScan.files(spark, touched), keyCol, ks)
     (df, ReadStats(v, files.size, touched.size, opened, manifested.size))
   }
 
@@ -345,7 +350,7 @@ object StatsRead {
     val touchedFiles = files.filter(f => asg.touched(f.getFileName.toString))
     val base =
       if (touchedFiles.isEmpty) emptyLike(spark, files, dir)
-      else spark.read.parquet(touchedFiles.map(_.toString): _*)
+      else VersionScan.files(spark, touchedFiles)
     // row-level tail, tiered like every other key filter: a small tuple
     // set becomes a literal OR-of-ANDs (each conjunct's equalities push
     // into the surviving files' row-group stats); larger driver-sized sets
@@ -420,7 +425,7 @@ object StatsRead {
     }.sum
     val scanned =
       if (scanFiles.isEmpty) 0L
-      else spark.read.parquet(scanFiles.map(_.toString): _*)
+      else VersionScan.files(spark, scanFiles)
         .filter(ks.matchPredicate(keyCol)).count()
     (metaCount + scanned,
       CountStats(live, files.size, metaFiles.size, scanFiles.size, opened))
@@ -468,7 +473,7 @@ object StatsRead {
         // null out uncastable values and fold a silently PARTIAL answer, so
         // non-integral schema drift fails loudly instead.
         import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
-        val scanDf = spark.read.parquet(scan.map(_.toString): _*)
+        val scanDf = VersionScan.files(spark, scan)
         scanDf.schema(keyCol).dataType match {
           case LongType | IntegerType | ShortType | ByteType => ()
           case t => throw new IllegalStateException(
@@ -505,7 +510,7 @@ object StatsRead {
     val scanned =
       if (scan.isEmpty) None
       else {
-        val row = spark.read.parquet(scan.map(_.toString): _*)
+        val row = VersionScan.files(spark, scan)
           .agg(min(col(keyCol).cast("string")), max(col(keyCol).cast("string"))).head
         if (row.isNullAt(0)) None else Some((row.getString(0), row.getString(1)))
       }
@@ -900,7 +905,7 @@ object StatsRead {
     // saturation premise: the manifest holds ~the dense row count
     val mDir = BloomManifest.shardDir(live).getOrElse(
       throw new IllegalStateException("manifest generation missing"))
-    val mRows = spark.read.parquet(mDir.toString)
+    val mRows = VersionScan.dir(spark, mDir)
       .filter(col("cname") === "row_hash").count()
     val nFiles = TargetedDelete.partFiles(live).size
     val dense = nFiles.toLong * (SatBits / 64)

@@ -475,7 +475,7 @@ object TargetedDelete {
       // one job over ONLY the partially-intersecting files; bloomed tables
       // keep parquet-native blooms in the surviving rewrite too
       val rewriteOut = stageDir.resolve("rewrite")
-      survivors(spark.read.parquet(rewrite.map(_.toString): _*), keyCol, ks)
+      survivors(VersionScan.files(spark, rewrite), keyCol, ks)
         .write.options(KeyBloom.nativeWriteOptionsCols(
           pr.blooms.keys.map(_._2).toSet ++ BloomManifest.coveredColumns(liveDir),
           KeyBloom.ndvFor(rewrite, n => pr.keyRows(n).rowCount)))
@@ -669,16 +669,12 @@ object TargetedDelete {
         .repartitionByRange(8, col("doc_id"))
         .sortWithinPartitions(col("doc_id")), root)
     deleteKeys(spark, root, "doc_id", deleteSet)
-    spark.read.parquet(s"$root/${AtomicTable.currentVersion(root).get}")
-      .groupBy(col("lang"), col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_chars")).as("sum_chars"),
-        sum(col("doc_id")).as("sum_ids"))
+    survivorAgg(spark, root)
   }
 
   /** Post-delete survivor aggregate — the shared tail of every s22 query. */
   private def survivorAgg(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(s"$root/${AtomicTable.currentVersion(root).get}")
+    AtomicTable.read(spark, root)
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("sum_chars"),

@@ -98,8 +98,13 @@ object IngestLoop {
     val (annotated, newLedger) = admit(batch, ledger, limit)
     val admitted = annotated.filter(col("admitted")).localCheckpoint()
 
+    // fetched ONCE per batch: the keyed merge evaluates its changeset twice
+    // (key probe, then kernel), and a recomputed fetch re-sends every
+    // admitted request. Not `Tables.stageLocal`: its fallback is recompute,
+    // the fault here, and a streamed micro-batch gives its size gate no
+    // estimate. The volume is bounded by the admitted requests.
     val fetched = HttpSource.fetch(admitted.select(col("url")), "url",
-      transportFactory, sleeper = sleeper)
+      transportFactory, sleeper = sleeper).localCheckpoint(false)
     val parsed = fetched
       .filter(col("status") === 200)
       .select(from_json(col("body"),

@@ -36,6 +36,14 @@ object IngestLoopSpec {
 
   def mkTransport(): HttpSource.Transport = new HttpSource.ReplayTransport(script)
   val noSleep: Long => Unit = _ => ()
+
+  /** Every request any counting transport sent (local mode: executor
+    * tasks share this JVM). */
+  val sends = new java.util.concurrent.atomic.AtomicLong(0L)
+  def countingTransport(): HttpSource.Transport = new HttpSource.Transport {
+    private val inner = new HttpSource.ReplayTransport(script)
+    def send(url: String): HttpResponse = { sends.incrementAndGet(); inner.send(url) }
+  }
 }
 
 class IngestLoopSpec extends AnyFunSuite {
@@ -147,6 +155,43 @@ class IngestLoopSpec extends AnyFunSuite {
         s"stream-committed poi version was not indexed: $del")
       assert(!AtomicTable.read(spark, poiRoot).collect()
         .map(_.getString(0)).contains("g10"))
+    } finally q.stop()
+  }
+
+  test("ingest batch: each admitted request is sent once, plus its scripted retries") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = java.nio.file.Files.createTempDirectory("graftingestsends")
+    val (poiRoot, ledgerRoot) = (s"$base/poi", s"$base/ledger")
+    // the streaming entry: a micro-batch relation carries no size estimate
+    val input = MemoryStream[FetchRequest]
+    val q = IngestLoop.run(spark, input.toDS(), poiRoot, ledgerRoot,
+      IngestLoopSpec.countingTransport _, Limit, asOf = "2025-06-01 00:00:00",
+      appId = "ingest-sends", checkpoint = s"$base/ckpt", sleeper = noSleep)
+    def sent(reqs: FetchRequest*): Long = {
+      val before = sends.get()
+      input.addData(reqs)
+      q.processAllAvailable()
+      sends.get() - before
+    }
+    try {
+      // batch 0 bootstraps the poi table: two admitted, no retries
+      assert(sent(FetchRequest(1, "places", 100 * DayUs + 1000, "u1"),
+        FetchRequest(2, "places", 100 * DayUs + 2000, "u2")) == 2)
+      // batch 1 rides the keyed merge (a base version exists): the next day
+      // refills the bucket, three are admitted, one fourth is denied, and u4
+      // walks the retry ladder once (503 → 200)
+      assert(sent(FetchRequest(3, "places", 101 * DayUs + 10, "u4"),
+        FetchRequest(4, "places", 101 * DayUs + 20, "u3"),
+        FetchRequest(5, "places", 101 * DayUs + 30, "u9"),
+        FetchRequest(6, "places", 101 * DayUs + 40, "u12")) == 3 + 1)
+      val poi = AtomicTable.read(spark, poiRoot).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(poi == Map("g1" -> "Cafe One Renamed", "g2" -> "Cafe Two",
+        "g3" -> "Cafe Three", "g4" -> "Late Cafe"))
+      val led = AtomicTable.read(spark, ledgerRoot).collect()
+        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+      assert(led("places") == ((101L, 3L)))
     } finally q.stop()
   }
 }
